@@ -27,16 +27,14 @@ Spark-first shape: state lives in the Structured Streaming state store
 KV store), transport is Arrow-batched `applyInPandasWithState`, and
 eviction/timers ride the engine's watermark. The per-key buffer is the
 only Python-side logic; everything before/after is ordinary DataFrame
-code. On Spark 4.x `transformWithStateInPandas` offers finer-grained
-list state for the same design; `applyInPandasWithState` is used here
-because its timeout contract is stable across 3.4+.
+code.
 
-Serialization is BATCH-oriented, never per-row: each micro-batch's new
-rows are encoded as ONE column-oriented JSON chunk (timestamps
-vectorized to epoch-µs), and flush decodes chunk-at-a-time and sorts
-with one argsort. The Arrow batch is already columnar in hand — paying
-`iloc[i]` + `json.dumps` per row would make ingest Python-bound at the
-reference's real duty (hours of buffered stream per key).
+State is BATCH-oriented, never per-row: each micro-batch's new rows
+are kept as ONE Arrow IPC record batch (the engine's own columnar
+format, schema derived once from the input's), so every Spark type
+round-trips the buffer with its nulls. The dedup seen-set is read
+zero-copy from the buffered batches' event-time column, and flush is
+one table `take` in event-time order.
 
 Parallelism: with `key_cols` the order is restored per key group (the
 reference orders per Kafka partition; its demo runs 1 partition). With
@@ -47,26 +45,26 @@ risk 2).
 
 from __future__ import annotations
 
-import json
 from typing import Iterator, Sequence
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 _GLOBAL_KEY = "__reorder_key"
 
 # State per key group: when the pending punctuation fires (epoch ms),
-# buffered event times (epoch µs, parallel to the concatenated chunk
-# rows), and one column-oriented JSON chunk per ingest batch.
+# and one Arrow IPC record batch (body only, no schema message) per
+# ingest batch.
 _STATE_SCHEMA = T.StructType(
     [
         T.StructField("fire_at_ms", T.LongType()),
-        T.StructField("ts_us", T.ArrayType(T.LongType())),
-        T.StructField("chunks", T.ArrayType(T.StringType())),
+        T.StructField("chunks", T.ArrayType(T.BinaryType())),
     ]
 )
 
@@ -114,12 +112,13 @@ def reorder_stream(
         watermark_delay = grace
 
     out_schema = df.schema
-    field_types = {f.name: f.dataType for f in out_schema.fields}
-    ts_fields = [
-        f.name for f in out_schema.fields if isinstance(f.dataType, T.TimestampType)
-    ]
     columns = [f.name for f in out_schema.fields]
+    # Timestamps stay naive µs, as the pandas batches carry them.
+    arrow_schema = to_arrow_schema(out_schema, timestamp_utc=False)
     grace_ms = _grace_ms(grace)
+
+    def decode(chunk: bytes) -> pa.RecordBatch:
+        return pa.ipc.read_record_batch(pa.py_buffer(chunk), arrow_schema)
 
     def handle(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
@@ -130,38 +129,37 @@ def reorder_stream(
             # arrive re-registers a timer, which is observationally the
             # reference's periodic schedule (a periodic fire over an
             # empty store forwards nothing).
-            _, ts_us, chunks = state.get
+            _, chunks = state.get
             state.remove()
-            yield _decode_chunks_sorted(
-                chunks, np.asarray(ts_us, dtype="int64"), columns, field_types
-            )
+            table = pa.Table.from_batches(map(decode, chunks), arrow_schema)
+            order = np.argsort(_micros(table.column(ts_col)), kind="stable")
+            yield table.take(order).to_pandas()
             return
 
-        exists = state.exists
-        if exists:
-            fire_at_ms, ts_us, chunks = state.get
-            ts_us, chunks = list(ts_us), list(chunks)
-        else:
-            fire_at_ms, ts_us, chunks = 0, [], []
-        seen = set(ts_us)
+        fire_at_ms, chunks = state.get if state.exists else (0, [])
+        chunks = list(chunks)
+        seen = np.concatenate(
+            [np.empty(0, "int64")] + [_micros(decode(c).column(ts_col)) for c in chunks]
+        )
 
         for pdf in pdfs:
-            new, new_ts = _dedup_batch(pdf, ts_col, seen)
+            new = _dedup_batch(pdf, ts_col, seen)
             if new is None:
                 continue
-            seen.update(new_ts)
-            ts_us.extend(new_ts)
-            chunks.append(_encode_batch(new, ts_fields))
+            batch = pa.RecordBatch.from_pandas(
+                new, schema=arrow_schema, preserve_index=False
+            )
+            chunks.append(batch.serialize().to_pybytes())
+            seen = np.concatenate([seen, _micros(batch.column(ts_col))])
 
-        if not ts_us:
-            state.remove() if exists else None
+        if not chunks:
             return
 
         if fire_at_ms == 0:
             # First buffered record after a flush schedules the next
             # punctuation one grace later in event time.
-            fire_at_ms = min(ts_us) // 1000 + grace_ms
-        state.update((fire_at_ms, ts_us, chunks))
+            fire_at_ms = int(seen.min()) // 1000 + grace_ms
+        state.update((fire_at_ms, chunks))
         # The engine clears timeout info on every invocation, so it is
         # re-armed here each time; event-time timeouts must be set
         # strictly later than the current watermark.
@@ -196,74 +194,21 @@ def reorder_stream(
     return out.select(*columns)
 
 
+def _micros(ts) -> np.ndarray:
+    """Epoch-µs int64 view of a µs timestamp column (never null here)."""
+    return np.asarray(ts, dtype="datetime64[us]").view("int64")
+
+
 def _dedup_batch(
-    pdf: pd.DataFrame, ts_col: str, seen: set
-) -> tuple[pd.DataFrame | None, list[int]]:
+    pdf: pd.DataFrame, ts_col: str, seen: np.ndarray
+) -> pd.DataFrame | None:
     """Vectorized first-writer-wins (Application.java:89-93): drop rows
     whose event timestamp is already buffered or duplicated earlier in
-    this batch. Returns (kept rows, their epoch-µs timestamps)."""
+    this batch."""
     if pdf.empty:
-        return None, []
-    micros = pdf[ts_col].astype("datetime64[us]").astype("int64")
+        return None
+    micros = pd.Series(_micros(pdf[ts_col]))
     keep = (~micros.duplicated()) & (~micros.isin(seen))
     if not keep.any():
-        return None, []
-    new = pdf.loc[keep.values]
-    return new, micros.loc[keep.values].tolist()
-
-
-def _encode_batch(pdf: pd.DataFrame, ts_fields: list[str]) -> str:
-    """One ingest batch → one column-oriented JSON chunk. Timestamp
-    columns are vectorized to epoch-µs ints (NaT → null); other columns
-    pass through `tolist()` (numpy → native) with NaN/None → null."""
-    cols: dict[str, list] = {}
-    for c in pdf.columns:
-        s = pdf[c]
-        if c in ts_fields:
-            dt = s.astype("datetime64[us]")
-            ints = dt.astype("int64").astype(object)
-            ints[dt.isna().values] = None
-            cols[c] = ints.tolist()
-        else:
-            cols[c] = [
-                None if _isna_scalar(v) else v for v in s.tolist()
-            ]
-    return json.dumps(cols)
-
-
-def _isna_scalar(v) -> bool:
-    if v is None:
-        return True
-    if isinstance(v, float):
-        return v != v  # NaN
-    return v is pd.NaT
-
-
-def _decode_chunks_sorted(
-    chunks: Sequence[str],
-    ts_us: np.ndarray,
-    columns: list[str],
-    field_types: dict[str, T.DataType],
-) -> pd.DataFrame:
-    """Decode buffered chunks, concatenate column-wise, and return the
-    rows in event-time order (one stable argsort over all buffered
-    timestamps). Dtype restore is null-safe: integer columns with nulls
-    use pandas' nullable Int64 instead of raising on astype."""
-    decoded = [json.loads(ch) for ch in chunks]
-    cols = {
-        c: [v for d in decoded for v in d[c]] for c in columns
-    }
-    pdf = pd.DataFrame(cols, columns=columns)
-    order = np.argsort(ts_us, kind="stable")
-    pdf = pdf.iloc[order].reset_index(drop=True)
-    for name, dtype in field_types.items():
-        if isinstance(dtype, T.TimestampType):
-            pdf[name] = pd.to_datetime(pdf[name], unit="us")
-        elif isinstance(dtype, (T.LongType, T.IntegerType)):
-            if pdf[name].isna().any():
-                pdf[name] = pdf[name].astype("Int64")
-            else:
-                pdf[name] = pdf[name].astype("int64")
-        elif isinstance(dtype, (T.DoubleType, T.FloatType)):
-            pdf[name] = pdf[name].astype("float64")
-    return pdf
+        return None
+    return pdf.loc[keep.values]

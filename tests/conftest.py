@@ -25,12 +25,16 @@ def pytest_configure(config):
 def pytest_collection_modifyitems(config, items):
     """Deselect `slow`-marked sweeps by default (see marker doc above).
 
-    An explicit `-m` expression or SPARK_GRAFT_FULL_TESTS=1 restores
-    full control to the invoker; nothing is skipped silently — the
-    deselection shows in pytest's summary line."""
+    An explicit `-m` expression, a command line that names test files
+    or node IDs, or SPARK_GRAFT_FULL_TESTS=1 restores full control to
+    the invoker; nothing is skipped silently — the deselection shows in
+    pytest's summary line."""
     if os.environ.get("SPARK_GRAFT_FULL_TESTS"):
         return
     if config.getoption("-m"):
+        return
+    here = config.invocation_params.dir
+    if any(os.path.isfile(here / arg.split("::")[0]) for arg in config.args):
         return
     selected = []
     deselected = []

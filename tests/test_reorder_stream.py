@@ -48,6 +48,7 @@ def run_once(spark, in_dir, out_dir, ckpt):
         .start()
     )
     q.awaitTermination(300)
+    return q
 
 
 def read_output(out_dir) -> pd.DataFrame:
@@ -125,6 +126,40 @@ def test_straggler_lands_in_next_flush(spark, tmp_path):
     assert list(got["order_id"])[12:] == ["0-late", "13"]
 
 
+def test_arrival_behind_watermark_is_dropped(spark, tmp_path):
+    """A record older than the watermark is dropped by the engine, as
+    the `watermark_delay` docstring says: unlike the reference, which
+    buffers arbitrarily late records for the next flush, it is counted
+    in `numRowsDroppedByWatermark` and never reaches the buffer."""
+    in_dir, out_dir, ckpt = tmp_path / "in", tmp_path / "out", tmp_path / "ckpt"
+    write_input(spark, GOLDEN_INPUT, in_dir, 12)
+    run_once(spark, in_dir, out_dir, ckpt)
+    assert list(read_output(out_dir)["order_id"]) == EXPECTED_ORDER_IDS
+
+    # The watermark now stands at 11-05T00:00 - grace = 11-04T14:00;
+    # this record is a day behind it.
+    late = ("0-behind", "one", "too-late", 1.0, ts("2021-11-03T13:00:00Z"))
+    write_input(spark, [late], in_dir, 13)
+    q = run_once(spark, in_dir, out_dir, ckpt)
+    progress = q.recentProgress
+    assert sum(p.numInputRows for p in progress) == 1
+    dropped = sum(
+        op.numRowsDroppedByWatermark for p in progress for op in p.stateOperators
+    )
+    assert dropped == 1
+
+    # Two later records fire the next flush (as in the restart test):
+    # only they come out; the late record was never buffered.
+    fresh = [
+        ("13", "one", "closer", 5.0, ts("2021-11-06T00:00:00Z")),
+        ("14", "one", "closer", 6.0, ts("2021-11-07T00:00:00Z")),
+    ]
+    write_input(spark, fresh, in_dir, 15)
+    run_once(spark, in_dir, out_dir, ckpt)
+    got = list(read_output(out_dir)["order_id"])
+    assert got == EXPECTED_ORDER_IDS + ["13", "14"]
+
+
 def test_checkpoint_restart_exactly_once(spark, tmp_path):
     """Restarting from the checkpoint neither reprocesses consumed
     input nor re-emits flushed output — the exactly-once contract of
@@ -193,130 +228,15 @@ def test_keyed_reorder_orders_per_key(spark, tmp_path):
     assert by_key["dev-B"] == ["b2", "b1", "zz2"]
 
 
-def test_golden_reorder_stream_tws(spark, tmp_path):
-    """The transformWithStateInPandas backend passes the same golden
-    topology test (plus duplicate-timestamp drop) as the
-    applyInPandasWithState backend. Skipped where the transformWithState
-    protobuf runtime is unavailable (this container has no
-    google.protobuf; any standard cluster install does)."""
-    import pytest
-
-    from kafka_streams_reorder_timestamp_spark.streaming.reorder_tws import (
-        reorder_stream_tws,
-        tws_available,
-    )
-
-    if not tws_available():
-        pytest.skip("google.protobuf unavailable — transformWithState runtime cannot load")
-
-    in_dir, out_dir, ckpt = tmp_path / "in", tmp_path / "out", tmp_path / "ckpt"
-    dup = ("13-dup", "one", "impostor", 999.0, GOLDEN_INPUT[3][4])
-    write_input(spark, GOLDEN_INPUT + [dup], in_dir, 13)
-    src = spark.readStream.schema(STREAM_SCHEMA).parquet(str(in_dir))
-    out = reorder_stream_tws(src, ts_col="event_time", grace="10 hours")
-    q = (
-        out.writeStream.format("parquet")
-        .option("path", str(out_dir))
-        .option("checkpointLocation", str(ckpt))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    got = read_output(out_dir)
-    assert list(got["order_id"]) == EXPECTED_ORDER_IDS
-    assert "13-dup" not in set(got["order_id"])
-
-
-def test_tws_processor_logic_unit():
-    """Unit-test the StatefulProcessor against fake state/timers (the
-    protobuf runtime is absent here, so the processor's buffer-insert /
-    dedup / ordered-flush logic is driven directly)."""
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    from kafka_streams_reorder_timestamp_spark.streaming.reorder_tws import (
-        _ReorderProcessor,
-    )
-
-    class FakeList:
-        def __init__(self):
-            self.rows = []
-        def get(self):
-            return iter(self.rows)
-        def put(self, rows):
-            self.rows = list(rows)
-        def appendList(self, rows):
-            self.rows.extend(rows)
-        def clear(self):
-            self.rows = []
-
-    class FakeValue:
-        def __init__(self):
-            self.v = None
-        def get(self):
-            return self.v
-        def update(self, v):
-            self.v = v
-        def clear(self):
-            self.v = None
-
-    class FakeHandle:
-        def __init__(self):
-            self.timers = []
-        def getListState(self, name, schema):
-            return FakeList()
-        def getValueState(self, name, schema):
-            return FakeValue()
-        def registerTimer(self, ms):
-            self.timers.append(ms)
-
-    class FakeTimerValues:
-        def getCurrentWatermarkInMs(self):
-            return 0
-
-    cols = ["order_id", "event_time"]
-    types = {"order_id": T.StringType(), "event_time": T.TimestampType()}
-    proc = _ReorderProcessor(cols, ["event_time"], types, "event_time", 3_600_000)
-    handle = FakeHandle()
-    proc.init(handle)
-
-    def pdf(rows):
-        return pd.DataFrame(
-            {"order_id": [r[0] for r in rows],
-             "event_time": pd.to_datetime([r[1] for r in rows], unit="ms")}
-        )
-
-    # batch 1: out-of-order + duplicate ts; nothing emitted, timer set
-    out = list(proc.handleInputRows((0,), iter([pdf(
-        [("b", 2000), ("a", 1000), ("dup", 2000)])]), FakeTimerValues()))
-    assert out == []
-    assert handle.timers == [1000 + 3_600_000]  # min ts (1000 ms) + grace
-    assert len(proc._seen.rows) == 2  # dup dropped
-    assert len(proc._chunks.rows) == 1  # ONE chunk per ingest batch
-
-    # batch 2: another record, timer NOT re-registered
-    list(proc.handleInputRows((0,), iter([pdf([("c", 500)])]), FakeTimerValues()))
-    assert len(handle.timers) == 1
-    assert len(proc._seen.rows) == 3
-    assert len(proc._chunks.rows) == 2
-
-    # timer fires: full buffer drains sorted, state cleared
-    class FakeInfo:
-        def getExpiryTimeInMs(self):
-            return 0
-
-    flushed = list(proc.handleExpiredTimer((0,), FakeTimerValues(), FakeInfo()))
-    assert len(flushed) == 1
-    assert list(flushed[0]["order_id"]) == ["c", "a", "b"]
-    assert proc._seen.rows == [] and proc._chunks.rows == []
-    assert proc._fire.v is None
-
-
 def test_null_payload_columns_survive_flush(spark, tmp_path):
-    """Nullable int / timestamp / double / string payload columns must
-    round-trip the state buffer: a null in a long column must not crash
-    the flush cast, and a NaT in a secondary timestamp column must come
-    back null, not a min-int64 sentinel."""
+    """Nullable payload columns of every common type must round-trip the
+    state buffer with their values and nulls: a null in a long column
+    must not crash the flush, a NaT in a secondary timestamp column must
+    come back null, not a min-int64 sentinel, and date / decimal /
+    binary / array payloads must neither crash the buffer nor change."""
+    import datetime as _dt
+    from decimal import Decimal
+
     schema = T.StructType(
         [
             T.StructField("id", T.StringType()),
@@ -325,16 +245,21 @@ def test_null_payload_columns_survive_flush(spark, tmp_path):
             T.StructField("seen_at", T.TimestampType()),
             T.StructField("score", T.DoubleType()),
             T.StructField("note", T.StringType()),
+            T.StructField("day", T.DateType()),
+            T.StructField("amount", T.DecimalType(12, 2)),
+            T.StructField("blob", T.BinaryType()),
+            T.StructField("tags", T.ArrayType(T.LongType())),
         ]
     )
     base = ts("2021-11-04T00:00:00Z")
     rows = [
-        ("b", base + 7_200_000, None, None, None, None),
-        ("a", base + 3_600_000, 7, base, 1.5, "x"),
-        ("zz", base + 86_400_000, 1, None, 0.0, "sentinel"),
+        ("b", base + 7_200_000, None, None, None, None, None, None, None, None),
+        ("a", base + 3_600_000, 7, base, 1.5, "x",
+         _dt.date(2021, 11, 3), Decimal("1234567890.12"), b"\x00\xffab", [3, -1, 2]),
+        ("zz", base + 86_400_000, 1, None, 0.0, "sentinel",
+         _dt.date(2021, 11, 5), Decimal("0.01"), b"", []),
     ]
     in_dir, out_dir, ckpt = tmp_path / "in", tmp_path / "out", tmp_path / "ckpt"
-    import datetime as _dt
 
     def _to_dt(ms):
         return (
@@ -346,7 +271,7 @@ def test_null_payload_columns_survive_flush(spark, tmp_path):
         )
 
     df = spark.createDataFrame(
-        [(i, _to_dt(t), q, _to_dt(s), sc, n) for i, t, q, s, sc, n in rows],
+        [(r[0], _to_dt(r[1]), r[2], _to_dt(r[3])) + r[4:] for r in rows],
         schema=schema,
     )
     df.coalesce(1).write.parquet(str(in_dir))
@@ -365,10 +290,18 @@ def test_null_payload_columns_survive_flush(spark, tmp_path):
     assert list(got["id"]) == ["a", "b", "zz"]
     b = got[got["id"] == "b"].iloc[0]
     assert pd.isna(b["qty"]) and pd.isna(b["seen_at"]) and pd.isna(b["score"])
-    assert b["note"] is None or pd.isna(b["note"])
+    for col in ("note", "day", "amount", "blob", "tags"):
+        assert b[col] is None or pd.isna(b[col]), col
     a = got[got["id"] == "a"].iloc[0]
     assert a["qty"] == 7 and a["score"] == 1.5 and a["note"] == "x"
     assert pd.Timestamp(a["seen_at"]).value // 1_000_000 == base
+    assert a["day"] == _dt.date(2021, 11, 3)
+    assert a["amount"] == Decimal("1234567890.12")
+    assert bytes(a["blob"]) == b"\x00\xffab"
+    assert list(a["tags"]) == [3, -1, 2]
+    zz = got[got["id"] == "zz"].iloc[0]
+    assert bytes(zz["blob"]) == b"" and list(zz["tags"]) == []
+    assert zz["amount"] == Decimal("0.01")
 
 
 def test_empty_stream_terminates_cleanly(spark, tmp_path):
@@ -387,10 +320,10 @@ def test_empty_stream_terminates_cleanly(spark, tmp_path):
 
 def test_all_null_event_time_rows_are_dropped(spark, tmp_path):
     """Rows whose event time is NULL cannot be placed on the event-time
-    axis: the watermark machinery never advances past them and the
-    buffer sort has no key. The engine's contract is the SQL one —
-    NULL event-time rows are excluded (dropped at the watermark, as
-    Spark's eviction semantics imply), never a crash."""
+    axis: they have no watermark comparison and no buffer sort key.
+    `reorder_stream` removes them with an explicit `isNotNull` filter
+    ahead of the watermark, so they never reach the state store —
+    never a crash."""
     in_dir, out_dir, ckpt = tmp_path / "in", tmp_path / "out", tmp_path / "ckpt"
     # `time` is non-nullable in ELECTRONIC_ORDER; the NULL lives in the
     # extracted event_time column (the shape a bad payload produces
