@@ -7,11 +7,18 @@ exist because this engine DELEGATES optimization to Catalyst, so its
 perf contract is "the right plan shape", not hand-written execution.
 Tests pin the shape; at 100 TB the same assertions hold because they
 are scale-free properties of the plan, not timings.
+
+Every helper reads the JVM physical-plan tree through `_walk`, which
+descends by the one rule in `_children`. Explain text
+(`physical_plan`, `executed_plan`) is for failure messages and
+substring pins only: `formatted` mode prints every node twice, and an
+executed cached plan prints its initial plan next to its final one,
+so counting text gives wrong answers.
 """
 
 from __future__ import annotations
 
-import re
+from typing import Iterator
 
 from pyspark.sql import DataFrame
 
@@ -33,13 +40,73 @@ def executed_plan(df: DataFrame) -> str:
     return physical_plan(df, "simple")
 
 
+def _seq(s) -> list:
+    return [s.apply(i) for i in range(s.size())]
+
+
+def _kind(node) -> str:
+    return node.getClass().getSimpleName()
+
+
+def _children(node, kind: str, into_cache: bool = True) -> list:
+    """The one rule for descending the physical-plan tree.
+
+    - `AdaptiveSparkPlanExec`: its current plan (the final one once
+      executed).
+    - `*QueryStageExec`: the stage's plan. Once AQE has run, stages
+      are leaves, and a walk that stops there finds nothing beneath
+      an executed cache.
+    - `InMemoryTableScan*`: the cached relation's plan, unless
+      `into_cache` is False.
+    - anything else: its children plus its expression subqueries
+      (scalar, broadcast, dynamic-pruning).
+
+    `ReusedExchangeExec` has no children: it points at an exchange
+    already in the tree, so it is not a second shuffle."""
+    if kind == "AdaptiveSparkPlanExec":
+        return [node.executedPlan()]
+    if kind.endswith("QueryStageExec"):
+        return [node.plan()]
+    if kind.startswith("InMemoryTableScan"):
+        return [node.relation().cachedPlan()] if into_cache else []
+    return _seq(node.children()) + _seq(node.subqueries())
+
+
+def _walk(df: DataFrame, into_cache: bool = True) -> Iterator[tuple[str, object]]:
+    """Every `(class simple name, node)` of `df`'s physical plan,
+    parents before children."""
+    stack = [df._jdf.queryExecution().executedPlan()]
+    while stack:
+        node = stack.pop()
+        kind = _kind(node)
+        yield kind, node
+        stack.extend(reversed(_children(node, kind, into_cache)))
+
+
+def _split_top_level(s: str) -> list[str]:
+    """Split a comma-separated list, ignoring commas inside nested
+    parentheses or brackets."""
+    parts, depth, cur = [], 0, []
+    for ch in s:
+        if ch == "," and depth == 0:
+            parts.append("".join(cur))
+            cur = []
+            continue
+        depth += {"(": 1, "[": 1, ")": -1, "]": -1}.get(ch, 0)
+        cur.append(ch)
+    if cur:
+        parts.append("".join(cur))
+    return parts
+
+
 def pushed_filters(df: DataFrame) -> list[str]:
-    """Filters that reached the parquet scan (PushedFilters: [...])."""
+    """Filters that reached the file scans, one string per filter
+    (e.g. `LessThanOrEqual(l_shipdate,1998-09-02T00:00)`)."""
     out: list[str] = []
-    for m in re.finditer(r"PushedFilters: \[([^\]]*)\]", physical_plan(df)):
-        body = m.group(1).strip()
-        if body:
-            out.extend(s.strip() for s in body.split(","))
+    for kind, node in _walk(df):
+        if kind == "FileSourceScanExec":
+            body = node.metadata().get("PushedFilters").get().strip()[1:-1]
+            out.extend(f.strip() for f in _split_top_level(body) if f.strip())
     return out
 
 
@@ -47,143 +114,82 @@ def read_schema_columns(df: DataFrame) -> set[str]:
     """Columns each scan actually reads (union over scans) — the
     column-pruning check: a 2-column projection must not read 16."""
     cols: set[str] = set()
-    for m in re.finditer(r"ReadSchema: struct<([^>]*)>", physical_plan(df)):
-        for field in m.group(1).split(","):
-            name = field.split(":")[0].strip()
-            if name:
-                cols.add(name)
+    for kind, node in _walk(df):
+        if kind == "FileSourceScanExec":
+            cols.update(node.requiredSchema().fieldNames())
     return cols
 
 
 def broadcast_join_count(df: DataFrame) -> int:
-    return len(re.findall(r"BroadcastHashJoin", physical_plan(df)))
+    return sum(1 for kind, _ in _walk(df) if kind == "BroadcastHashJoinExec")
 
 
 def shuffle_count(df: DataFrame) -> int:
-    """Number of shuffle exchanges in the plan (AQE may later coalesce
-    partitions, but each Exchange is still a full data movement).
-    Counted on the simple-mode plan, where the Exchange node and its
-    partitioning print on one line."""
-    return len(
-        re.findall(
-            r"Exchange (?:hashpartitioning|rangepartitioning|SinglePartition)",
-            physical_plan(df, "simple"),
-        )
-    )
+    """Number of shuffle exchanges in the plan, whatever their
+    partitioning (AQE may later coalesce partitions, but each Exchange
+    is still a full data movement)."""
+    return sum(1 for kind, _ in _walk(df) if kind == "ShuffleExchangeExec")
 
 
 def exchange_partition_keys(df: DataFrame) -> list[list[str]]:
-    """The partitioning key column names of every shuffle Exchange in
-    the plan (one list per exchange; `#id` suffixes, sort directions
-    and the numPartitions literal stripped). Lets a test pin shuffles
-    BY GRANULARITY — e.g. "exactly N exchanges keyed on doc_id" —
-    instead of a total-count ceiling that quietly absorbs a lost
-    broadcast (a 2048-row scalar exchange and a corpus-wide one both
-    count 1 in shuffle_count)."""
-    plan = physical_plan(df, "simple")
+    """The names of the attributes each hash- or range-partitioned
+    shuffle Exchange is keyed on (one list per exchange). A key
+    expression such as `cast(doc_id as bigint)` reads as `doc_id`.
+    Lets a test pin shuffles BY GRANULARITY — e.g. "exactly N
+    exchanges keyed on doc_id" — instead of a total-count ceiling that
+    quietly absorbs a lost broadcast (a 2048-row scalar exchange and a
+    corpus-wide one both count 1 in shuffle_count)."""
     out: list[list[str]] = []
-    for m in re.finditer(
-        r"Exchange (?:hash|range)partitioning\(", plan
-    ):
-        # scan to the matching close paren (keys may nest parens)
-        i, depth = m.end(), 1
-        while i < len(plan) and depth:
-            depth += {"(": 1, ")": -1}.get(plan[i], 0)
-            i += 1
-        body = plan[m.end(): i - 1]
-        keys: list[str] = []
-        for tok in _split_top_level(body):
-            # Resolve each key to the ATTRIBUTE NAMES it references
-            # (every `name#id` in the expression), not the outer
-            # function name — `cast(doc_id#5L as bigint)` must read as
-            # a doc_id-keyed exchange or granularity pins would miss a
-            # corpus shuffle hiding under a derived key. Attribute
-            # names themselves may contain parens (auto-named exprs
-            # like `count(1)#200L` / `FLOOR(x)#12L`), so match an
-            # identifier with an optional parenthesized tail, then
-            # also surface the identifiers INSIDE that tail — an
-            # exchange must never come back keyless just because its
-            # key was an unaliased expression. Literal-only tokens
-            # (the numPartitions int) reference nothing and drop out.
-            for name in re.findall(
-                r"([A-Za-z_]\w*(?:\([^()]*\))?)#\d+", tok
-            ):
-                keys.append(name)
-                if "(" in name:
-                    keys.extend(
-                        n
-                        for n in re.findall(r"[A-Za-z_]\w*", name)[1:]
-                    )
-        out.append(keys)
+    for kind, node in _walk(df):
+        if kind == "ShuffleExchangeExec":
+            part = node.outputPartitioning()
+            if _kind(part) in ("HashPartitioning", "RangePartitioning"):
+                out.append([a.name() for a in _seq(part.references().toSeq())])
     return out
 
 
-def _split_top_level(s: str) -> list[str]:
-    """Split a comma-separated expression list, ignoring commas inside
-    nested parentheses."""
-    parts, depth, cur = [], 0, []
-    for ch in s:
-        if ch == "," and depth == 0:
-            parts.append("".join(cur))
-            cur = []
-            continue
-        depth += {"(": 1, ")": -1}.get(ch, 0)
-        cur.append(ch)
-    if cur:
-        parts.append("".join(cur))
-    return parts
-
-
-def _plan_indent(s: str) -> int:
-    """Tree depth of a physical-plan line, in characters of connector
-    prefix. The whole-stage-codegen "*(n) " marker is dropped BEFORE
-    measuring: it sits between the tree connectors and the node name,
-    so lstrip-ing "*" together with the connectors would count it as
-    extra depth and a codegen'd same-depth sibling (e.g. after an
-    InMemoryTableScan) would wrongly classify as a child."""
-    s = re.sub(r"\*\(\d+\) ", "", s)
-    return len(s) - len(s.lstrip(" +-:"))
-
-
 def single_partition_scan_funnels(df: DataFrame) -> list[str]:
-    """Detect the global-sort scale killer: an `Exchange SinglePartition`
-    whose subtree reaches a file Scan WITHOUT passing through an
-    aggregate. That shape funnels raw table data through one task (a
-    bare Window.orderBy / global sort-without-limit); a single-partition
-    exchange above a (partial) aggregate is fine — its input is already
-    group-cardinality, not row-cardinality.
+    """Detect the global-sort scale killer: a single-partition shuffle
+    Exchange with some path below it that reaches a scan WITHOUT
+    passing through an aggregate. That shape funnels raw table data
+    through one task (a bare Window.orderBy / global
+    sort-without-limit); a single-partition exchange above a (partial)
+    aggregate is fine — its input is already group-cardinality, not
+    row-cardinality.
 
-    Returns the offending `Exchange SinglePartition` subtree snippets
-    (empty list = clean plan)."""
-    lines = physical_plan(df, "simple").splitlines()
-    indent = _plan_indent
+    Returns the offending exchanges' subtrees (empty list = clean
+    plan)."""
 
-    bad: list[str] = []
-    for i, ln in enumerate(lines):
-        if "Exchange SinglePartition" not in ln:
-            continue
-        base = indent(ln)
-        subtree = []
-        for nxt in lines[i + 1:]:
-            if nxt.strip() and indent(nxt) <= base:
-                break
-            subtree.append(nxt)
-        agg_seen = False
-        for s in subtree:
-            if "Aggregate" in s:  # HashAggregate / SortAggregate /
-                agg_seen = True  # ObjectHashAggregate partial
-            if "Scan" in s and not agg_seen:
-                bad.append("\n".join([ln] + subtree))
-                break
-    return bad
+    def raw_scan_below(node, kind: str) -> bool:
+        if "Aggregate" in kind:  # HashAggregate / SortAggregate /
+            return False  # ObjectHashAggregate partial
+        kids = _children(node, kind)
+        if not kids:
+            return "Scan" in kind
+        return any(raw_scan_below(k, _kind(k)) for k in kids)
+
+    return [
+        node.treeString()
+        for kind, node in _walk(df)
+        if kind == "ShuffleExchangeExec"
+        and _kind(node.outputPartitioning()) == "SinglePartition$"
+        and raw_scan_below(node, kind)
+    ]
 
 
 def wholestage_codegen_ids(df: DataFrame) -> int:
     """How many WholeStageCodegen spans cover the plan (0 means the hot
     path fell out of codegen entirely — a red flag for scan-heavy ops).
-    Executes the plan (noop sink): AQE annotates codegen only in the
-    final plan."""
-    return len(set(re.findall(r"\*\((\d+)\)", executed_plan(df))))
+    Executes the plan with `collect()`: AQE annotates codegen only in
+    the final plan."""
+    df.collect()
+    return len(
+        {
+            node.codegenStageId()
+            for kind, node in _walk(df)
+            if kind == "WholeStageCodegenExec"
+        }
+    )
 
 
 def assert_plan(
@@ -214,9 +220,9 @@ def assert_plan(
 
 
 def nodes_outside_cache(df: DataFrame, needle: str) -> list[str]:
-    """Plan lines containing ``needle`` that are NOT beneath an
-    InMemoryTableScan ancestor in the plan tree — i.e. work a branch
-    would execute directly instead of reading from a cache.
+    """Plan nodes whose `simpleString` contains ``needle`` and that are
+    NOT beneath an InMemoryTableScan in the plan tree — i.e. work a
+    branch would execute directly instead of reading from a cache.
 
     The pin for fused multi-rollup plans (quality_eval_report): with
     the scored frame persisted, every rollup branch's path to the
@@ -228,55 +234,10 @@ def nodes_outside_cache(df: DataFrame, needle: str) -> list[str]:
     is meaningless; ancestry is the invariant. (A query whose only
     cache is the upstream labeled-tokens persist still shows its
     scoring join outside any cache — which is exactly how this
-    distinguishes the fused report from a standalone rollup.)
-
-    Implementation (r14): walks the physical-plan TREE via the JVM
-    objects instead of parsing explain() text. The text walk
-    (_nodes_outside_cache_lines below, kept for its documented indent
-    semantics + unit test) breaks on nested EXECUTED caches: an
-    InMemoryRelation whose cachedPlan is `AdaptiveSparkPlan
-    isFinalPlan=true` (now produced by the classifier's eager tiny-
-    table materialization) prints its `== Final/Initial Plan ==`
-    sections at indents tied to an outer ancestor — Spark interleaves
-    them across sibling relations — so cached FileScans popped the
-    indent-ancestry stack and were mis-flagged. The tree walk stops at
-    InMemoryTableScanExec (everything beneath reads from the cache),
-    descends AdaptiveSparkPlanExec via executedPlan(), and follows
-    expression subqueries (broadcast/scalar) via QueryPlan.subqueries."""
+    distinguishes the fused report from a standalone rollup.)"""
     out: list[str] = []
-
-    def walk(node) -> None:
-        cls = node.getClass().getSimpleName()
-        if cls.startswith("InMemoryTableScan"):
-            return
-        if cls == "AdaptiveSparkPlanExec":
-            walk(node.executedPlan())
-        else:
-            line = node.simpleString(100)
-            if needle in line:
-                out.append(line)
-            ch = node.children()
-            for i in range(ch.size()):
-                walk(ch.apply(i))
-        sq = node.subqueries()
-        for i in range(sq.size()):
-            walk(sq.apply(i))
-
-    walk(df._jdf.queryExecution().executedPlan())
+    for _, node in _walk(df, into_cache=False):
+        line = node.simpleString(100)
+        if needle in line:
+            out.append(line)
     return out
-
-
-def _nodes_outside_cache_lines(lines: list[str], needle: str) -> list[str]:
-    imts_depths: list[int] = []
-    bad: list[str] = []
-    for ln in lines:
-        if not ln.strip():
-            continue
-        ind = _plan_indent(ln)
-        while imts_depths and ind <= imts_depths[-1]:
-            imts_depths.pop()
-        if needle in ln and not imts_depths:
-            bad.append(ln.strip()[:160])
-        if "InMemoryTableScan" in ln:
-            imts_depths.append(ind)
-    return bad

@@ -88,7 +88,6 @@ def reorder_stream(
     ts_col: str,
     grace: str = "10 hours",
     key_cols: Sequence[str] | None = None,
-    watermark_delay: str | None = None,
 ) -> DataFrame:
     """Re-sequence a streaming DataFrame by event time.
 
@@ -96,21 +95,17 @@ def reorder_stream(
     ----------
     df: streaming DataFrame; `ts_col` must be TimestampType.
     ts_col: event-time column (the Avro `time` field analog).
-    grace: punctuation interval in event time (Application.java:144).
+    grace: punctuation interval in event time (Application.java:144),
+        and the watermark lag on `ts_col`: as in the reference, grace
+        IS the lateness horizon. Records later than this are dropped
+        by the engine — a stronger late-data policy than the
+        reference, which buffers arbitrarily late records for the next
+        flush (SURVEY §2.1 note 4 sanctions adopting watermark
+        semantics and documenting the difference); stragglers WITHIN
+        the horizon land in the next flush exactly like the reference.
     key_cols: restore order within these key groups; None = one global
         order (single state group — the reference's 1-partition demo).
-    watermark_delay: watermark lag on `ts_col`; defaults to `grace`,
-        matching the reference where grace IS the lateness horizon.
-        Records later than this are dropped by the engine — a stronger
-        late-data policy than the reference, which buffers arbitrarily
-        late records for the next flush (SURVEY §2.1 note 4 sanctions
-        adopting watermark semantics and documenting the difference);
-        stragglers WITHIN the horizon land in the next flush exactly
-        like the reference.
     """
-    if watermark_delay is None:
-        watermark_delay = grace
-
     out_schema = df.schema
     columns = [f.name for f in out_schema.fields]
     # Timestamps stay naive µs, as the pandas batches carry them.
@@ -175,9 +170,7 @@ def reorder_stream(
     # non-nullable Avro `time` long directly, so NULL is an edge only
     # this engine's nullable-column inputs can produce. Pinned by
     # tests/test_reorder_stream.py::test_all_null_event_time_rows_are_dropped.
-    stream = df.filter(F.col(ts_col).isNotNull()).withWatermark(
-        ts_col, watermark_delay
-    )
+    stream = df.filter(F.col(ts_col).isNotNull()).withWatermark(ts_col, grace)
     if key_cols:
         grouped = stream.groupBy(*key_cols)
     else:

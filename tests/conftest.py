@@ -48,6 +48,50 @@ def pytest_collection_modifyitems(config, items):
         items[:] = selected
 
 
+_GATEWAY_REFUSED = pytest.StashKey[bool]()
+
+
+def _gateway_refused(exc: BaseException | None) -> bool:
+    """True when `exc` (or an exception it chains from) is a
+    ConnectionRefusedError raised inside py4j: the Spark JVM behind
+    the gateway is gone."""
+    while exc is not None:
+        if isinstance(exc, ConnectionRefusedError):
+            tb = exc.__traceback__
+            while tb is not None and tb.tb_next is not None:
+                tb = tb.tb_next
+            return tb is not None and tb.tb_frame.f_globals.get(
+                "__name__", ""
+            ).startswith("py4j")
+        exc = exc.__cause__ or exc.__context__
+    return False
+
+
+@pytest.hookimpl(wrapper=True)
+def pytest_runtest_makereport(item, call):
+    report = yield
+    if report.failed and call.excinfo and _gateway_refused(call.excinfo.value):
+        item.stash[_GATEWAY_REFUSED] = True
+    return report
+
+
+@pytest.hookimpl(wrapper=True)
+def pytest_runtest_protocol(item, nextitem):
+    """Stop the run at the first test that finds the Spark JVM gone
+    (crashed, or killed by the OOM killer). Every later Spark test
+    would fail with the same ConnectionRefusedError, burying the one
+    failure that matters under a cascade."""
+    result = yield
+    if item.stash.get(_GATEWAY_REFUSED, False):
+        pytest.exit(
+            f"{item.nodeid} failed because the Spark JVM refuses Py4J"
+            " connections: it crashed or was killed. Stopping; every"
+            " later Spark test would fail the same way.",
+            returncode=pytest.ExitCode.TESTS_FAILED,
+        )
+    return result
+
+
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 ORACLE_SF_DIR = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01")
 

@@ -107,9 +107,11 @@ def test_incremental_band_table_join(spark, sf_dir):
                 .dropDuplicates(["batch_doc", "corpus_doc"])
             )
             plan = plans.physical_plan(cand, "simple")
-            # exchanges: batch side into the join + the dropDuplicates
-            # agg; the STORED side contributes none (bucketed scan)
-            assert plans.shuffle_count(cand) == 2, plan
+            # exchanges: the round-robin repartition that widens the
+            # batch before minhash_band_rows' signature UDF, the batch
+            # side into the join, and the dropDuplicates agg; the
+            # STORED side contributes none (bucketed scan)
+            assert plans.shuffle_count(cand) == 3, plan
             assert "Bucketed: true" in plans.physical_plan(cand), plan
             got = {(r.batch_doc, r.corpus_doc) for r in cand.collect()}
         finally:

@@ -609,27 +609,29 @@ def test_selection_approx_no_window(spark, sf_dir):
     spark.catalog.clearCache()
 
 
-def test_plan_indent_codegen_sibling_not_excused():
-    """A '*(n) '-prefixed (whole-stage-codegen) node printed as a
-    SAME-depth sibling after an InMemoryTableScan must not be
-    classified as beneath the cache: lstrip-ing '*' with the tree
-    connectors counted the codegen marker as extra depth, so the
-    ancestry stack failed to pop and a re-executed scan was silently
-    excused (round-10 ADVICE fix)."""
-    from kafka_streams_reorder_timestamp_spark.plans import (
-        _nodes_outside_cache_lines,
-        _plan_indent,
-    )
+def test_plan_helpers_on_known_tiny_plans(spark, tmp_path):
+    """Each helper against a tiny plan whose shape is known: one
+    broadcast join counts once (formatted explain prints every node
+    twice), a pushed filter comes back whole (its comma is inside the
+    parentheses), a nested type's `>` does not end the read schema,
+    a round-robin repartition is a shuffle, and an uncached sibling of
+    a cached branch is reported while the cached scan is not."""
+    path = str(tmp_path / "t.parquet")
+    spark.createDataFrame(
+        [([1.0], 1), ([2.0], 7)], "a array<float>, b int"
+    ).write.parquet(path)
+    t = spark.read.parquet(path)
 
-    lines = [
-        "Union",
-        ":- InMemoryTableScan [x#1]",
-        ":     +- Scan parquet cached_side",
-        "+- *(1) Scan parquet uncached_side",
-    ]
-    # the codegen sibling sits at the SAME depth as the cache node
-    assert _plan_indent(lines[3]) == _plan_indent(lines[1])
-    bad = _nodes_outside_cache_lines(lines, "Scan parquet")
-    assert bad == ["+- *(1) Scan parquet uncached_side"]
-    # and a scan genuinely beneath the cache stays excused
-    assert _nodes_outside_cache_lines(lines[:3], "Scan parquet") == []
+    assert plans.broadcast_join_count(t.join(F.broadcast(t.select("b")), "b")) == 1
+    assert "LessThan(b,5)" in plans.pushed_filters(t.filter("b < 5"))
+    assert plans.read_schema_columns(t) == {"a", "b"}
+    assert plans.shuffle_count(t.repartition(4)) == 1
+
+    cached = t.filter("b < 5").persist()
+    try:
+        df = cached.unionByName(t.filter("b >= 5"))
+        outside = plans.nodes_outside_cache(df, "Scan parquet")
+        assert len(outside) == 1, outside
+        assert "GreaterThanOrEqual(b,5)" in outside[0], outside
+    finally:
+        cached.unpersist()

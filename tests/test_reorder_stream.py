@@ -128,9 +128,10 @@ def test_straggler_lands_in_next_flush(spark, tmp_path):
 
 def test_arrival_behind_watermark_is_dropped(spark, tmp_path):
     """A record older than the watermark is dropped by the engine, as
-    the `watermark_delay` docstring says: unlike the reference, which
-    buffers arbitrarily late records for the next flush, it is counted
-    in `numRowsDroppedByWatermark` and never reaches the buffer."""
+    the `grace` entry of the `reorder_stream` docstring says: unlike
+    the reference, which buffers arbitrarily late records for the next
+    flush, it is counted in `numRowsDroppedByWatermark` and never
+    reaches the buffer."""
     in_dir, out_dir, ckpt = tmp_path / "in", tmp_path / "out", tmp_path / "ckpt"
     write_input(spark, GOLDEN_INPUT, in_dir, 12)
     run_once(spark, in_dir, out_dir, ckpt)

@@ -30,13 +30,11 @@ def main() -> int:
     if "--only" in argv:
         only = set(argv[argv.index("--only") + 1].split(","))
 
+    from kafka_streams_reorder_timestamp_spark import plans
     from kafka_streams_reorder_timestamp_spark.operators import registry
     from kafka_streams_reorder_timestamp_spark.session import get_spark
 
     spark = get_spark(app_name="plandump")
-    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-        "formatted"
-    )
     os.makedirs(out_dir, exist_ok=True)
     n_ok = 0
     n_failed = 0
@@ -46,7 +44,7 @@ def main() -> int:
         spark.catalog.clearCache()
         try:
             df = builder(spark, sf_dir)
-            text = df._jdf.queryExecution().explainString(mode)
+            text = plans.physical_plan(df, "formatted")
             n_ok += 1
         except Exception as e:  # keep dumping the rest
             text = f"EXPLAIN FAILED: {type(e).__name__}: {e}"
